@@ -11,12 +11,12 @@ import java.nio.file.{Files, Paths}
   * Failure-honest: a query that throws is recorded with `null` time plus an
   * entry in `errors` (never folded into the headline total as a fake-fast
   * time). Round-over-round guard: per-query times are compared against a
-  * FLOOR taken as the min across all untainted BENCH_r*.json records
-  * (plus the round-2 numbers inlined below) and >2x slowdowns are listed
-  * in `regressions_x`, keyed by query name with the slowdown RATIO
-  * (now/baseline) as the value. The record carries load telemetry
-  * (`load`, `tainted`): a run that shared the machine with another
-  * workload is stamped tainted and never becomes a comparison floor.
+  * FLOOR taken as the min across all untainted BENCH_r*.json records and
+  * >2x slowdowns are listed in `regressions_x`, keyed by query name with
+  * the slowdown RATIO (now/baseline) as the value. The record carries
+  * load telemetry (`load`, `tainted`): a run that shared the machine with
+  * another workload is stamped tainted and never becomes a comparison
+  * floor.
   *
   * Methodology note, stated here and in the JSON (`cache_policy`): the
   * warm-up pass runs every headline query once at the target SF before
@@ -27,8 +27,12 @@ import java.nio.file.{Files, Paths}
   * subtree pays that cache's population inside each rep (the within-run
   * reuse it legitimately buys still counts), instead of runs 2..3 reading
   * the cache run 1 left behind — min-of-3 now measures steady-state cost
-  * including cache fill. Set SPARK_GRAFT_BENCH_KEEP_LRU=1 for the old
-  * warm-LRU comparison.
+  * including cache fill.
+  *
+  * [[SparkEntry.staged]] queries are timed as their serve alone: each
+  * build they need runs once per key before the warm-up, its wall
+  * seconds land in `setup_sec`, and a failed build is reported as an
+  * error on every query that needs it.
   */
 object Bench {
 
@@ -41,12 +45,14 @@ object Bench {
     * the xxhash64+sum on top is one narrow stage, negligible next to the
     * work it now honestly exposes. Map-typed columns aren't hashable —
     * such frames (none currently) fall back to count().
-    *
-    * THE one timing action: [[Scratch]] calls this same method, so
-    * isolated floor comparisons stay 1:1 with bench records by
-    * construction (ADVICE r14 #3 — no second copy to drift).
     */
-  def materialize(df: DataFrame): Unit = {
+  def materialize(df: DataFrame): Unit = { rowHash(df); () }
+
+  /** The value [[materialize]] computes: bit_xor of xxhash64 over every
+    * hashable output column of every row (0 for no rows), or the row
+    * count when no column is hashable.
+    */
+  def rowHash(df: DataFrame): Long = {
     def hashable(dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
       case _: org.apache.spark.sql.types.MapType => false
       case s: org.apache.spark.sql.types.StructType => s.fields.forall(f => hashable(f.dataType))
@@ -54,67 +60,32 @@ object Bench {
       case _ => true
     }
     val safe = df.schema.fields.filter(f => hashable(f.dataType)).map(f => org.apache.spark.sql.functions.col(f.name))
-    if (safe.isEmpty) { df.count(); () }
+    if (safe.isEmpty) df.count()
     else {
       // bit_xor, not sum: hashes span the full long range and an ANSI
       // sum overflows (killed the first hash_rows run, 93/93 errors)
-      df.select(org.apache.spark.sql.functions.xxhash64(safe: _*).as("__h"))
+      val r = df.select(org.apache.spark.sql.functions.xxhash64(safe: _*).as("__h"))
         .agg(org.apache.spark.sql.functions.expr("bit_xor(__h)"))
         .head()
-      ()
+      if (r.isNullAt(0)) 0L else r.getLong(0)
     }
   }
 
-  /** Re-based comparison floor (VERDICT r02 "what's wrong #5"): per-query
-    * seconds from BENCH_r02.json — the first round measured under the
-    * CURRENT methodology (warm-up pass + min-of-3), inlined so the
-    * regression guard compares like-for-like even if the file vanishes.
-    * The round-1 cold single-run numbers are retired: comparing a min-of-3
-    * floor against them understated regressions by the warm-up delta.
-    */
-  private val r02Baseline: Map[String, Double] = Map(
-    "q01_pricing_summary" -> 0.273064604, "q03_join_revenue" -> 0.673557633,
-    "q04_semi_join" -> 0.451076967, "q07_window_latest" -> 0.318894504,
-    "q11_scd2_upsert" -> 0.755488641, "q12_state_delta" -> 0.206440562,
-    "q13_explode_tokens" -> 0.166958701, "q21_dq_suite" -> 0.722663292,
-    "q30_dedup_exact" -> 0.244745102, "q32_text_quality" -> 0.206659361,
-    "q36_jaccard_pairs" -> 0.681421693, "q37_minhash_lsh" -> 0.576626292,
-    "q40_ann_bruteforce" -> 0.256108543, "q41_ann_lsh" -> 0.32213532,
-    "q43_event_windows" -> 0.253241066, "q24_sessions" -> 0.474027218,
-    "q49_asof_join" -> 0.196485629, "q50_multi_join" -> 0.932504144,
-    "q47_embedding_neardup" -> 0.664460294, "q64_tfidf" -> 0.815248317,
-    "q68_quality_filter" -> 1.026726051, "q39_simhash_portable" -> 0.123807525,
-    // the five headline queries added after r02 and the r06/r07 extras,
-    // floored at their first min-of-3 measurements (BENCH_r06 /
-    // round-7 local run) so the fallback guard covers the WHOLE suite —
-    // a missing key here would silently exempt a query from the >2x check
-    "q80_scd2_partitioned" -> 5.2854, "q85_ann_ivf_trained" -> 2.2633,
-    "q86_semantic_dedup" -> 2.6845, "q87_mixture_sample" -> 0.1503,
-    "q88_dup_groups" -> 2.0388,
-    "q89_gopher_gates" -> 0.9794, "q90_ann_ivf_sampled" -> 1.0807,
-    "q91_image_decode" -> 0.2959, "q92_hot_spans" -> 0.8659,
-    "q93_url_screen" -> 0.1364, "q94_audio_decode" -> 0.1838,
-    "q95_video_meta" -> 0.1396, "q96_ann_sq8" -> 0.1809,
-    "q97_corpus_pipeline" -> 0.7346, "q98_ann_ivf_sq8" -> 0.2491
-  )
-
   /** Per-query FLOOR = min across every parseable, UNTAINTED
-    * BENCH_r*.json in cwd (queries + extras), min-merged with the inlined
-    * r02-policy floor. Rationale (VERDICT r08 "what's wrong #1"): the
-    * previous newest-round-wins rule made one contention-polluted
-    * round-close record (r06, r08) the comparison base for the next round,
-    * producing phantom `regressions_x` that each cost a manual
-    * adjudication. A min-across-rounds floor is immune: an inflated record
+    * BENCH_r*.json in cwd (queries + extras). Rationale (VERDICT r08
+    * "what's wrong #1"): the previous newest-round-wins rule made one
+    * contention-polluted round-close record (r06, r08) the comparison base
+    * for the next round, producing phantom `regressions_x` that each cost
+    * a manual adjudication. A min-across-rounds floor is immune: an inflated record
     * never wins the min, and a record stamped `"tainted": true` by the
     * load telemetry below is excluded outright.
     *
     * The floor is SF-SCOPED: only records whose `sf` dir matches the
-    * current run contribute, and the r02 inline floor (an sf0.1
-    * measurement) applies only to sf0.1 runs — comparing an sf1 run
-    * against an sf0.1 floor flags every query ~10x "regressed", which is
-    * scale, not regression (the first telemetry-era sf1 refresh hit
-    * exactly this). A run at an SF with no prior record gets an empty
-    * floor and an honest empty `regressions_x`.
+    * current run contribute — comparing an sf1 run against an sf0.1
+    * floor flags every query ~10x "regressed", which is scale, not
+    * regression (the first telemetry-era sf1 refresh hit exactly this).
+    * A run at an SF with no prior record gets an empty floor and an
+    * honest empty `regressions_x`.
     */
   /** A query's stable identity across record formats: the `qNNN` prefix.
     * The round-close record the driver captures uses SHORT keys ("q114")
@@ -167,7 +138,6 @@ object Bench {
         floorsOf(if (f.getName.matches("BENCH_r\\d+\\.json")) root.path("parsed") else root)
       } catch { case _: Throwable => None }
     }.flatten
-    locally { val _ = r02Baseline } // retained for provenance; not merged (count()-era policy)
     val merged = perRound.groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).min }
     (s"min_untainted_rounds(n=$used,sf=${sfName(sfDir)})", merged)
   }
@@ -372,8 +342,8 @@ object Bench {
     // ~190-query suite would take hours on queries whose scale story is
     // already told elsewhere. The artifact carries the filter in `subset`
     // so a partial record can never read as a full-suite run; unset (the
-    // driver's call) = full suite, behavior unchanged. One-time setup
-    // builders are skipped when their probe query is filtered out.
+    // default) = full suite. Only the builds the selected queries need are
+    // run.
     val benchOnly = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.r)
     def keep(n: String): Boolean = benchOnly.forall(_.findFirstIn(n).isDefined)
 
@@ -388,166 +358,19 @@ object Bench {
     val loadStart = loadAvg1m()
     val sysT0 = sysBusyTicks(); val selfT0 = selfTicks()
 
-    // One-time setup OUTSIDE timing: build the q98 IVF+SQ8 serving layout
-    // once so the timed op is the probe — the per-query serving cost —
-    // not the index build (VERDICT r08 "what's wrong #2": build noise was
-    // masking probe-path regressions). The build cost is still reported,
-    // in `setup_sec`.
-    val q98SetupT0 = System.nanoTime()
-    val q98Built =
-      if (!keep("q98_ann_ivf_sq8")) None else try {
-        val (idx, cents, qv) = Queries.q98BuildIndex(spark, sfDir)
-        Some((idx, cents, qv, (System.nanoTime() - q98SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q106 warehouse build, same rationale: the timed op is the
-    // change-feed read (the per-invocation serving cost), not the two
-    // SCD-2 commit cycles that produce the versions (q80 already times
-    // those). Build cost lands in setup_sec.
-    val q106SetupT0 = System.nanoTime()
-    val q106Built =
-      if (!Seq("q106_change_feed", "q119_incremental_mv", "q141_version_drift", "q148_cdc_apply", "q166_stream_cdc_apply", "q172_join_mv").exists(keep)) None else try {
-        val (path, v1, v2) = Queries.q106Build(spark, sfDir)
-        Some((path, v1, v2, (System.nanoTime() - q106SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q127 PIT-warehouse build (record_from-stamped batches);
-    // the timed op is the probe join, the per-lookup serving cost.
-    val q127SetupT0 = System.nanoTime()
-    val q127Built =
-      if (!keep("q127_pit_lookup")) None else try {
-        val (path, _, v2) = Queries.q127Build(spark, sfDir)
-        Some((path, v2, (System.nanoTime() - q127SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q130 inverted-index build; the timed op is the bucket-pruned
-    // probe — the per-query serving cost, exactly q98's adjudication.
-    val q130SetupT0 = System.nanoTime()
-    val q130Built =
-      if (!keep("q130_bm25_index")) None else try Some((Queries.q130Build(spark, sfDir), (System.nanoTime() - q130SetupT0) / 1e9))
-      catch { case _: Throwable => None }
-    // One-time q148 replica bootstrap (on q106's prebuilt source); the
-    // timed op is feed + idempotent apply + active read — the per-batch
-    // replication cost, not the two warehouse builds it sat on before
-    // (which timed 13.9 s of q80-shaped commit I/O per run).
-    val q148SetupT0 = System.nanoTime()
-    val q148Built = (if (keep("q148_cdc_apply")) q106Built else None).flatMap { case (path, v1, _, _) =>
-      try {
-        // fast scratch medium, mirroring Queries.scratchRoot (round-18;
-        // round-19 adds the same 8 GiB tmpfs headroom gate — ADVICE r18):
-        // the replica is per-run ephemeral
-        val repBase = sys.env.get("SPARK_GRAFT_SCRATCH").orElse {
-          val shm = java.nio.file.Paths.get("/dev/shm")
-          if (java.nio.file.Files.isWritable(shm) && shm.toFile.getUsableSpace >= (8L << 30)) Some("/dev/shm")
-          else None
-        }
-        val rep = (repBase match {
-          case Some(b) => java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(b), "bench-q148")
-          case None => java.nio.file.Files.createTempDirectory("bench-q148")
-        }).toString + "/replica"
-        graft.sources.VersionedTable.commitDelta(
-          spark, rep, graft.sources.VersionedTable.read(spark, path, Some(v1)), "key_bucket")
-        Some((rep, (System.nanoTime() - q148SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
+    // One-time setup OUTSIDE timing: every build the selected staged
+    // queries need, once per key (q106's warehouse serves six queries),
+    // so each timed op is the per-invocation serve and build noise cannot
+    // mask a serve-path regression. A failed build is kept and rethrown
+    // by every serve that needs it, so those queries report it as their
+    // error.
+    val staged = SparkEntry.staged
+    val builds = new Builds(spark, sfDir)
+    (headline ++ extras).filter(keep).flatMap(staged.get).foreach { st =>
+      try builds(st.build) catch { case _: Throwable => }
     }
-    // One-time q140/q145 sweeps (VERDICT r10 "what's wrong #3": their 5-9 s
-    // bench numbers were ~75% in-query warehouse rebuild measured for the
-    // fourth time): each gets its OWN prebuilt warehouse (the sweeps mutate
-    // it, so the shared q106 warehouse can't be reused), the delete runs
-    // once in setup, and the timed op is the serving read — the post-sweep
-    // active read (q140) / the DV merge-on-read path (q145).
-    val q140SetupT0 = System.nanoTime()
-    val q140Built =
-      if (!keep("q140_gdpr_sweep")) None else try Some((Queries.q140Build(spark, sfDir), (System.nanoTime() - q140SetupT0) / 1e9))
-      catch { case _: Throwable => None }
-    val q145SetupT0 = System.nanoTime()
-    val q145Built =
-      if (!keep("q145_gdpr_deferred")) None else try Some((Queries.q145Build(spark, sfDir), (System.nanoTime() - q145SetupT0) / 1e9))
-      catch { case _: Throwable => None }
-    // One-time q161 PQ index build (train + encode + commit); the timed op
-    // is the ADC probe over stored codes — the per-query serving cost.
-    val q161SetupT0 = System.nanoTime()
-    val q161Built =
-      if (!keep("q161_pq_index_probe")) None else try {
-        val (idx, coarse, cbs, qv) = Queries.q161BuildIndex(spark, sfDir)
-        Some((idx, coarse, cbs, qv, (System.nanoTime() - q161SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q163 residual-PQ index build, same adjudication as q161:
-    // the timed op is the per-cell residual-ADC probe over stored codes.
-    val q163SetupT0 = System.nanoTime()
-    val q163Built =
-      if (!keep("q163_ann_ivf_pq_residual")) None else try {
-        val (idx, coarse, cbs, qv) = Queries.q163BuildIndex(spark, sfDir)
-        Some((idx, coarse, cbs, qv, (System.nanoTime() - q163SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q182 fixture landing (round-19): gzip-encoding the corpus
-    // into ~corpus/5 .warc.gz files is input generation, not the streaming
-    // operator — the timed op is the multi-batch ingest over the landed
-    // directory (fresh checkpoint per run), same adjudication as q130.
-    val q182SetupT0 = System.nanoTime()
-    val q182Built =
-      if (!keep("q182_stream_warc")) None else try Some((Queries.q182Build(spark, sfDir), (System.nanoTime() - q182SetupT0) / 1e9))
-      catch { case _: Throwable => None }
-    // One-time q165 sketch-rollup build (two day-range commits); the timed
-    // op is the range serve from stored sketch bytes — the recurring cost.
-    val q165SetupT0 = System.nanoTime()
-    val q165Built =
-      if (!keep("q165_sketch_rollup")) None else try {
-        val path = Queries.q165Build(spark, sfDir)
-        Some((path, (System.nanoTime() - q165SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-    // One-time q171 histogram-partial build; the timed op is the exact
-    // range merge over stored partials.
-    val q171SetupT0 = System.nanoTime()
-    val q171Built =
-      if (!keep("q171_histogram_rollup")) None else try {
-        val path = Queries.q171Build(spark, sfDir)
-        Some((path, (System.nanoTime() - q171SetupT0) / 1e9))
-      } catch { case _: Throwable => None }
-
-    // benched ops: SparkEntry.queries, with q98 overridden to probe-only
-    // against the prebuilt index and q106 to feed-only against the
-    // prebuilt warehouse (oracle semantics unchanged — Verify still runs
-    // the full build+probe / build+feed queries).
     val benchOp: Map[String, (SparkSession, String) => DataFrame] =
-      SparkEntry.queries ++ q98Built.map { case (idx, cents, qv, _) =>
-        "q98_ann_ivf_sq8" -> ((s: SparkSession, _: String) => Queries.q98Probe(s, idx, cents, qv))
-      } ++ q106Built.map { case (path, v1, v2, _) =>
-        "q106_change_feed" -> ((s: SparkSession, _: String) => Queries.q106Feed(s, path, v1, v2))
-      } ++ q106Built.map { case (path, v1, v2, _) =>
-        // q119 maintains its view from the SAME prebuilt warehouse — the
-        // timed op is bootstrap+feed+fold (the per-commit consumer cost)
-        "q119_incremental_mv" -> ((s: SparkSession, _: String) => Queries.q119Maintain(s, path, v1, v2))
-      } ++ q127Built.map { case (path, v2, _) =>
-        "q127_pit_lookup" -> ((s: SparkSession, d: String) => Queries.q127Probe(s, path, v2, d))
-      } ++ q130Built.map { case (idx, _) =>
-        "q130_bm25_index" -> ((s: SparkSession, _: String) => Queries.q130Probe(s, idx))
-      } ++ (for ((path, v1, v2, _) <- q106Built; (rep, _) <- q148Built) yield
-        "q148_cdc_apply" -> ((s: SparkSession, _: String) => Queries.q148Apply(s, path, v1, v2, rep))
-      ) ++ q140Built.map { case (path, _) =>
-        "q140_gdpr_sweep" -> ((s: SparkSession, _: String) => Queries.q140Read(s, path))
-      } ++ q145Built.map { case (path, _) =>
-        "q145_gdpr_deferred" -> ((s: SparkSession, _: String) => Queries.q145Read(s, path))
-      } ++ q106Built.map { case (path, v1, v2, _) =>
-        // q141 diffs versions of the SAME prebuilt warehouse — the timed
-        // cost is two time-travel reads + the metric aggregation
-        "q141_version_drift" -> ((s: SparkSession, _: String) => Queries.q141Drift(s, path, v1, v2))
-      } ++ q161Built.map { case (idx, coarse, cbs, qv, _) =>
-        "q161_pq_index_probe" -> ((s: SparkSession, _: String) => Queries.q161Probe(s, idx, coarse, cbs, qv))
-      } ++ q163Built.map { case (idx, coarse, cbs, qv, _) =>
-        "q163_ann_ivf_pq_residual" -> ((s: SparkSession, _: String) => Queries.q163Probe(s, idx, coarse, cbs, qv))
-      } ++ q165Built.map { case (path, _) =>
-        "q165_sketch_rollup" -> ((s: SparkSession, d: String) => Queries.q165Probe(s, path, d))
-      } ++ q106Built.map { case (path, v1, v2, _) =>
-        // q166 streams the SAME prebuilt warehouse's feed — the timed cost
-        // is the consumer side (fresh replica bootstrap + 2-batch apply)
-        "q166_stream_cdc_apply" -> ((s: SparkSession, _: String) => Queries.q166Stream(s, path, v1, v2))
-      } ++ q171Built.map { case (path, _) =>
-        "q171_histogram_rollup" -> ((s: SparkSession, _: String) => Queries.q171Probe(s, path))
-      } ++ q182Built.map { case (landing, _) =>
-        "q182_stream_warc" -> ((s: SparkSession, _: String) => Queries.q182Stream(s, landing))
-      } ++ q106Built.map { case (path, v1, v2, _) =>
-        // q172 maintains its view against the SAME prebuilt fact warehouse —
-        // the timed cost is the consumer cycle (dim build + feeds + maintain)
-        "q172_join_mv" -> ((s: SparkSession, d: String) => Queries.q172Maintain(s, path, v1, v2, d))
-      }
+      SparkEntry.queries ++ staged.map { case (name, st) => name -> st.over(builds) }
 
     // warm-up: every headline query once at the target SF (see scaladoc).
     // Errors here are not swallowed silently — they will recur in the timed
@@ -566,14 +389,12 @@ object Bench {
     // LRU registry before EVERY timed repetition, so each rep pays its own
     // cache population (the within-run reuse a cache legitimately buys
     // stays inside the rep; what goes away is runs 2..3 reading run 1's
-    // leftover cache — min-of-3 now measures steady-state cost). Old-style
-    // warm-LRU numbers remain comparable via SPARK_GRAFT_BENCH_KEEP_LRU=1.
-    val keepLru = sys.env.contains("SPARK_GRAFT_BENCH_KEEP_LRU")
+    // leftover cache — min-of-3 now measures steady-state cost).
     def timeAll(names: Seq[String]): Seq[(String, Option[Double], Option[String])] =
       names.map { name =>
         val fn = benchOp(name)
         val results = (1 to runsPerQuery).map { _ =>
-          if (!keepLru) graft.core.Caching.clearRegistry()
+          graft.core.Caching.clearRegistry()
           val t0 = System.nanoTime()
           try {
             materialize(fn(spark, sfDir))
@@ -654,19 +475,7 @@ object Bench {
     val tainted = loadStart > 1.5 || extShare.exists(_ > 0.30)
     val loadJson =
       s"""{"start":${num(loadStart)},"end":${num(loadEnd)},"ext_cpu_share":${extShare.map(num).getOrElse("null")},"quiesce_wait_sec":${num(quiesceWait)}}"""
-    val setupPairs: Seq[(String, Double)] =
-      q98Built.map { case (_, _, _, t) => "q98_index_build" -> t }.toSeq ++
-        q106Built.map { case (_, _, _, t) => "q106_warehouse_build" -> t }.toSeq ++
-        q127Built.map { case (_, _, t) => "q127_warehouse_build" -> t }.toSeq ++
-        q130Built.map { case (_, t) => "q130_index_build" -> t }.toSeq ++
-        q148Built.map { case (_, t) => "q148_replica_bootstrap" -> t }.toSeq ++
-        q140Built.map { case (_, t) => "q140_sweep_build" -> t }.toSeq ++
-        q145Built.map { case (_, t) => "q145_dv_build" -> t }.toSeq ++
-        q161Built.map { case (_, _, _, _, t) => "q161_index_build" -> t }.toSeq ++
-        q163Built.map { case (_, _, _, _, t) => "q163_index_build" -> t }.toSeq ++
-        q165Built.map { case (_, t) => "q165_rollup_build" -> t }.toSeq ++
-        q171Built.map { case (_, t) => "q171_rollup_build" -> t }.toSeq ++
-        q182Built.map { case (_, t) => "q182_fixture_land" -> t }.toSeq
+    val setupPairs = builds.seconds
     val setupJson = setupPairs.map { case (k, t) => s"${jstr(k)}:${num(t)}" }.mkString("{", ",", "}")
 
     val line =
@@ -675,7 +484,7 @@ object Bench {
         s""""remeasured":${remeasured.distinct.map(jstr).mkString("[", ",", "]")},"extras":$extraTimes,""" +
         s""""baseline":${jstr(baselineName)},"load":$loadJson,"tainted":$tainted,"setup_sec":$setupJson,""" +
         s""""runs_per_query":$runsPerQuery,"aggregation":"min","timing_action":"hash_rows",""" +
-        s""""cache_policy":"warm JVM, cold Caching-LRU per rep${if (keepLru) " (KEEP_LRU override: warm)" else ""}; min of $runsPerQuery runs per query; action = xxhash64 over every output column (full materialization, count() pruned pure projections); q98/q130/q161/q163 timed as stored-index probes, q106/q119/q127/q141/q148 against prebuilt warehouses, q140/q145 as post-sweep serving reads, q165/q171 as range probes over prebuilt rollups, q182 as the stream over a prelanded fixture dir (builds in setup_sec)"}"""
+        s""""cache_policy":"warm JVM, cold Caching-LRU per rep; min of $runsPerQuery runs per query; action = xxhash64 over every output column (full materialization, count() pruned pure projections); SparkEntry.staged queries timed as the serve over builds made once per key before warm-up (builds in setup_sec)"}"""
     // Full-fidelity record → BENCH_LOCAL_<sf>.json, keyed by SF so runs at
     // different scale factors never clobber each other (r11: a tainted
     // sf0.001 run overwrote the only untainted sf0.1 record and disarmed
@@ -729,7 +538,7 @@ object Bench {
         s""""baseline":${jstr(baselineName)},"load":$loadJson,""" +
         s""""tainted":$tainted,"setup_sec":$shortSetup,"runs_per_query":$runsPerQuery,""" +
         s""""aggregation":"min","timing_action":"hash_rows","key_style":"qnum",""" +
-        s""""cache_policy":"warm JVM cold-LRU-per-rep${if (keepLru) " (KEEP_LRU: warm)" else ""} min-of-$runsPerQuery, hash_rows; maps cap to slowest (sums/counts uncapped); full record in BENCH_LOCAL_<sf>.json"}"""
+        s""""cache_policy":"warm JVM cold-LRU-per-rep min-of-$runsPerQuery, hash_rows; maps cap to slowest (sums/counts uncapped); full record in BENCH_LOCAL_<sf>.json"}"""
     // never fail a finished run over line length: shrink the caps until
     // the record (plus sbt's trailing "[success]" line) fits the window
     val shortLine = Seq((30, 15), (15, 8), (6, 3))

@@ -1915,34 +1915,8 @@ object Queries {
     sampleAndChunk(cleaned)
   }
 
-  /** q98: IVF + SQ8 ANN — the composed billion-scale serving layout under
-    * one oracle, END-TO-END THROUGH STORAGE: the embeddings are quantized
-    * once and persisted cell-partitioned
-    * ([[Similarity.writeIvfSq8Index]] — codes-only VersionedTable, 1
-    * byte/dim at rest), then the probe opens only the query's 3 nearest
-    * cells' partitions and scores their int8 codes asymmetrically
-    * ([[Similarity.probeIvfSq8Index]], q96's recipe). The oracle chains
-    * both proofs — cell assignment + probe set replayed with ordered
-    * folds, then quantization + the int8 fold over exactly the candidate
-    * set — so any stored/inline divergence fails the gate. SimilaritySpec
-    * additionally proves the probe's file reads stay inside the nprobe
-    * partition dirs.
-    */
-  def q98(s: SparkSession, dir: String): DataFrame = {
-    // served from the PERSISTED layout: quantize once, store codes
-    // cell-partitioned in a VersionedTable, probe opens only nprobe
-    // partition dirs — the oracle replays the inline computation, so a
-    // stored/inline divergence (codes, cells, kernel) fails the gate.
-    // Unique dir per call: each oracle run gates a fresh build.
-    val (idx, centroids, qvec) = q98BuildIndex(s, dir)
-    q98Probe(s, idx, centroids, qvec)
-  }
-
   /** q98's one-time half: resolve centroids/query driver-side (8 rows +
-    * 1 row — bounded) and persist the IVF+SQ8 serving layout. Split out
-    * so Bench can build ONCE in setup and time only [[q98Probe]] — the
-    * repeated serving op a deployment actually pays per query — without
-    * the build cost masking probe-path regressions (VERDICT r08).
+    * 1 row — bounded) and persist the IVF+SQ8 serving layout.
     */
   def q98BuildIndex(s: SparkSession, dir: String): (String, Seq[(Long, Seq[Double])], Seq[Float]) = {
     val emb = t(s, dir, "embeddings")
@@ -2239,25 +2213,8 @@ object Queries {
   def q105(s: SparkSession, dir: String): DataFrame =
     Dedup.dedupSubstrings(t(s, dir, "documents"), "doc_id", "text", k = 8)
 
-  /** q106: CHANGE DATA FEED ([[graft.sources.VersionedTable.changeFeed]])
-    * — q80's two-commit SCD-2 warehouse build, then the typed row-level
-    * diff between the post-batch1 and post-batch2 versions: each updated
-    * customer yields an `update_preimage`/`update_postimage` pair for the
-    * closed row plus an `insert` for the new active row; untouched rows
-    * (even inside rewritten buckets) emit nothing. Only manifest-changed
-    * buckets are read on either side. Oracle recomputes all three change
-    * classes relationally from `orders`.
-    */
-  def q106(s: SparkSession, dir: String): DataFrame = {
-    val (path, v1, v2) = q106Build(s, dir)
-    q106Feed(s, path, v1, v2)
-  }
-
-  /** q106's one-time warehouse build (two SCD-2 commit cycles). The bench
-    * runs this once in setup (reported as `setup_sec`) so the TIMED
-    * operation is [[q106Feed]] — the change feed itself, the per-invocation
-    * serving cost — mirroring q98's stored-index probe timing. Verify
-    * still runs the full build+feed [[q106]].
+  /** q106's one-time warehouse build (two SCD-2 commit cycles), shared by
+    * every query that serves from the q106 warehouse.
     */
   def q106Build(s: SparkSession, dir: String): (String, Long, Long) = {
     val orders = t(s, dir, "orders")
@@ -2401,26 +2358,7 @@ object Queries {
       emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", dim, coarse, cbs, qvec, nprobe = 3, k = 20)
   }
 
-  /** q161: PERSISTED IVF+PQ INDEX ([[Similarity.writePqIndex]] /
-    * [[Similarity.probePqIndex]]) — q115's serving layout made
-    * storage-real, the q98 treatment at 32x: train once (q114's two
-    * deterministic Lloyd iterations), encode each vector to 8 packed
-    * one-byte codes, store them cell-partitioned by the q72 coarse
-    * quantizer in a VersionedTable, then serve top-20 by opening ONLY the
-    * query's 3 nearest cells' partitions and folding the driver-built ADC
-    * table over the stored bytes. The oracle replays the inline
-    * computation (q115's chain), so any stored/inline divergence — codes,
-    * cells, pack, ADC kernel — fails the gate; SimilaritySpec adds the
-    * file-level pruning proof.
-    */
-  def q161(s: SparkSession, dir: String): DataFrame = {
-    val (idx, coarse, cbs, qvec) = q161BuildIndex(s, dir)
-    q161Probe(s, idx, coarse, cbs, qvec)
-  }
-
-  /** q161's one-time half: train codebooks, encode, persist the PQ layout
-    * (split out so Bench times only the probe — the per-query serving op).
-    */
+  /** q161's one-time half: train codebooks, encode, persist the PQ layout. */
   def q161BuildIndex(s: SparkSession, dir: String): (String, Seq[(Long, Seq[Double])], Seq[Seq[(Long, Seq[Double])]], Seq[Float]) = {
     val emb = t(s, dir, "embeddings")
     val dim = 64
@@ -2459,24 +2397,7 @@ object Queries {
       qvec: Seq[Float]): DataFrame =
     Similarity.probePqIndex(s, idx, "vec_id", qvec, 20, 64, coarse, cbs, nprobe = 3)
 
-  /** q163: RESIDUAL-ENCODED IVF+PQ (IVFADC — the standard billion-scale
-    * FAISS layout, public design): q161's persisted index with the PQ
-    * codes assigned in RESIDUAL space — each vector stores
-    * `PQ(v − μ_cell(v))`, and a probe scores each cell's candidates
-    * against the residual query `q − μ_c` via that cell's own ADC table.
-    * Residuals cluster far tighter around the origin than raw vectors,
-    * so the same 8-byte code budget buys materially better recall
-    * (SimilaritySpec measures it head-to-head). The oracle replays the
-    * whole chain — coarse assign, residual, residual-space training,
-    * encode, per-cell ADC — bit-for-bit over the stored index.
-    */
-  def q163(s: SparkSession, dir: String): DataFrame = {
-    val (idx, coarse, cbs, qvec) = q163BuildIndex(s, dir)
-    q163Probe(s, idx, coarse, cbs, qvec)
-  }
-  /** q163's one-time half: residual-space training + encode + commit
-    * (split out so Bench times only the probe, q161's adjudication).
-    */
+  /** q163's one-time half: residual-space training + encode + commit. */
   def q163BuildIndex(s: SparkSession, dir: String): (String, Seq[(Long, Seq[Double])], Seq[Seq[(Long, Seq[Double])]], Seq[Float]) = {
     val emb = t(s, dir, "embeddings")
     val dim = 64
@@ -2678,23 +2599,8 @@ object Queries {
     Sampling.splitFromRep(g, "group_id")
   }
 
-  /** q127: POINT-IN-TIME LOOKUP JOIN ([[operators.Scd2
-    * .pointInTimeLookup]]) — "the warehouse as it was known at time t",
-    * as a join: every (custkey, probe instant) resolves to the SCD-2
-    * version valid then. The warehouse stamps `record_from` as loader
-    * payload (commit 1 at 2001-01-01, commit 2 at 2002-01-01); probes at
-    * 2001-06-01 see the first batch's rows only (including rows since
-    * superseded), probes at 2002-06-01 see the post-upsert state — no
-    * future leakage in either direction. Oracle replays both probe
-    * instants relationally from `orders`.
-    */
-  def q127(s: SparkSession, dir: String): DataFrame = {
-    val (path, _, v2) = q127Build(s, dir)
-    q127Probe(s, path, v2, dir)
-  }
-
   /** q127's warehouse build (two SCD-2 commits whose batches carry
-    * `record_from`). Bench times [[q127Probe]] only, build in setup_sec.
+    * `record_from`).
     */
   def q127Build(s: SparkSession, dir: String): (String, Long, Long) = {
     val orders = t(s, dir, "orders")
@@ -2714,7 +2620,7 @@ object Queries {
     (tmp, v1, v2)
   }
 
-  /** The probe read for [[q127]]: every warehouse custkey probed at two
+  /** q127's probe read: every warehouse custkey probed at two
     * instants (between the commits, and after both).
     */
   def q127Probe(s: SparkSession, path: String, v2: Long, dir: String): DataFrame = {
@@ -2779,22 +2685,8 @@ object Queries {
     TimeSeries.funnelSteps(t(s, dir, "events"), "user_id", "ts", "event_type",
       Seq("signup", "view", "click", "purchase"))
 
-  /** q119: INCREMENTAL MATERIALIZED-VIEW MAINTENANCE ([[operators.Mv]])
-    * — the per-order-year (active-row count, total cents) view over the
-    * q106 SCD-2 warehouse, bootstrapped at v1 and then MAINTAINED to v2
-    * purely from the change feed: O(changed rows) deltas folded into the
-    * view, never a second snapshot scan. The oracle recomputes the v2
-    * view relationally from `orders`, so the hash gate proves
-    * maintain(bootstrap(v1), feed) == recompute(v2) exactly.
-    */
-  def q119(s: SparkSession, dir: String): DataFrame = {
-    val (path, v1, v2) = q106Build(s, dir)
-    q119Maintain(s, path, v1, v2)
-  }
-
-  /** The maintenance read for [[q119]] against a prebuilt warehouse (the
-    * bench times this — the per-commit consumer cost — with the build in
-    * `setup_sec`, like q106).
+  /** q119's per-commit half: bootstrap the view at v1 and maintain it to
+    * v2 from the change feed of a built q106 warehouse.
     */
   def q119Maintain(s: SparkSession, path: String, v1: Long, v2: Long): DataFrame = {
     val keyExpr = year(col("o_orderdate")).cast("long")
@@ -2946,18 +2838,6 @@ object Queries {
       "doc_id", "text"
     )
   }
-
-  /** q130: PERSISTED BM25 INDEX ([[operators.Retrieval.writeBm25Index]] /
-    * [[operators.Retrieval.probeBm25Index]]) — q103's scoring served from
-    * a stored inverted index instead of a per-query corpus tokenization:
-    * postings and document frequencies hash-partitioned by token bucket
-    * on disk, a probe reads only its terms' bucket directories (the text
-    * twin of q98's stored IVF+SQ8 serving path; the bench times the probe
-    * with the one-time build in setup_sec). Result is row-identical to
-    * running bm25TopK directly, which is what the oracle recomputes.
-    */
-  def q130(s: SparkSession, dir: String): DataFrame =
-    q130Probe(s, q130Build(s, dir))
 
   /** q130's one-time half: tokenize + persist the index layout. */
   def q130Build(s: SparkSession, dir: String): String = {
@@ -3130,25 +3010,9 @@ object Queries {
   def q139(s: SparkSession, dir: String): DataFrame =
     TextAnalysis.trainBpeMerges(t(s, dir, "documents"), "text", nMerges = 8)
 
-  /** q140: RIGHT-TO-BE-FORGOTTEN SWEEP, ORACLE-GATED — builds the q106
-    * SCD-2 warehouse (two commits), then [[operators.Scd2.deleteKeys]]
-    * removes every record (history included) for the doomed key set (all
-    * MACHINERY-segment customers — a broadcast null-safe anti join over
-    * only the touched buckets), and the surviving ACTIVE snapshot is
-    * emitted. The oracle recomputes final state relationally: global
-    * latest order per customer minus the doomed segment — so the delete
-    * path's bucket pruning, manifest clears and anti-join semantics are
-    * all hash-gated, not just spec-proven.
-    */
-  def q140(s: SparkSession, dir: String): DataFrame =
-    q140Read(s, q140Build(s, dir))
-
-  /** q140's one-time half: build the two-commit warehouse and run the
-    * copy-on-write takedown sweep once. Split out so Bench times only
-    * [[q140Read]] — the post-sweep serving read — instead of re-measuring
-    * the q80-shaped commit I/O a fourth time (VERDICT r10 "what's wrong
-    * #3"); the sweep itself is bucket-pruned O(touched buckets) and its
-    * cost lands in setup_sec.
+  /** q140's one-time half: build its own two-commit warehouse (the sweep
+    * mutates it, so the shared q106 one can't serve) and run the
+    * copy-on-write takedown sweep once — bucket-pruned, O(touched buckets).
     */
   def q140Build(s: SparkSession, dir: String): String = {
     val (path, _, _) = q106Build(s, dir)
@@ -3209,23 +3073,8 @@ object Queries {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
   }
 
-  /** q145: DEFERRED GDPR DELETE (deletion vectors, merge-on-read —
-    * [[graft.sources.VersionedTable.deleteKeysDeferred]]): q140's
-    * takedown sweep with the physical rewrite deferred — the delete
-    * commits as a key-list sidecar + manifest entry (O(|keys|),
-    * independent of table size) and every read anti-joins it. Same
-    * oracle as q140 (the relational recompute), gating the merge-on-
-    * read serving path; VersionedTableSpec covers the no-bucket-
-    * rewritten claim, compact's physical apply + entry clear, and
-    * vacuum's sidecar reclaim.
-    */
-  def q145(s: SparkSession, dir: String): DataFrame =
-    q145Read(s, q145Build(s, dir))
-
-  /** q145's one-time half: warehouse build + the O(|keys|) deferred
-    * delete commit. Bench times only [[q145Read]] — the merge-on-read
-    * serving path (base read anti-joined against the DV sidecar), which
-    * is what the deletion-vector design exists to make cheap.
+  /** q145's one-time half: its own warehouse build + the O(|keys|)
+    * deferred delete commit.
     */
   def q145Build(s: SparkSession, dir: String): String = {
     val (path, _, _) = q106Build(s, dir)
@@ -3236,7 +3085,10 @@ object Queries {
     path
   }
 
-  /** q145's per-invocation half: the DV-filtered (merge-on-read) active read. */
+  /** q145's per-invocation half: the DV-filtered (merge-on-read) active
+    * read — base read anti-joined against the DV sidecar, the path the
+    * deletion-vector design exists to make cheap.
+    */
   def q145Read(s: SparkSession, path: String): DataFrame =
     graft.sources.VersionedTable
       .read(s, path)
@@ -3267,28 +3119,6 @@ object Queries {
     */
   def q147(s: SparkSession, dir: String): DataFrame =
     Sampling.domainCap(s, t(s, dir, "documents"), "source", "doc_id", maxPerDomain = 10)
-
-  /** q148: CDC DOWNSTREAM APPLY
-    * ([[graft.sources.VersionedTable.applyChangeFeed]]) — the consumer
-    * half of the q106 change feed: a replica bootstrapped at v1 follows
-    * the source to v2 by applying the feed (idempotent upsert-by-key,
-    * touched-bucket rewrite only). Returned rows are the replica's
-    * ACTIVE snapshot; the oracle re-derives v2's active set from the
-    * source relations, so bootstrap + feed + apply are all gated.
-    * VersionedTableSpec asserts full-table equality (history included)
-    * and idempotent re-apply.
-    */
-  def q148(s: SparkSession, dir: String): DataFrame = {
-    import graft.sources.VersionedTable
-    val (path, v1, v2) = q106Build(s, dir)
-    val replica = scratchDir("cdc_replica") + "/replica"
-    VersionedTable.commitDelta(s, replica, VersionedTable.read(s, path, Some(v1)), "key_bucket")
-    val feed = VersionedTable.changeFeed(s, path, v1, v2, Seq("o_custkey", "o_orderkey"))
-    VersionedTable.applyChangeFeed(s, replica, feed, Seq("o_custkey", "o_orderkey"), "key_bucket")
-    VersionedTable.read(s, replica)
-      .filter(col("actv_flg") === "Y")
-      .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
-  }
 
   /** q149: CONTAINMENT SELF-JOIN ([[Dedup.containmentPairs]]) —
     * asymmetric |A∩B|/|A| detection of documents mostly contained in
@@ -3492,11 +3322,17 @@ object Queries {
       t(s, dir, "documents"), budget = 512, nShards = 8,
       outDir = scratchDir("shards") + "/out")
 
-  /** q148's per-batch serving op against a PREBUILT source warehouse and
-    * an already-bootstrapped replica: derive the feed, apply it
-    * (idempotent — a re-apply converges, which is exactly what repeated
-    * bench runs exercise), read the active snapshot. The bench times
-    * this; Verify still runs the full build+bootstrap+apply [[q148]].
+  /** q148's one-time half: bootstrap a replica at the source's v1. */
+  def q148Bootstrap(s: SparkSession, srcPath: String, v1: Long): String = {
+    import graft.sources.VersionedTable
+    val replica = scratchDir("cdc_replica") + "/replica"
+    VersionedTable.commitDelta(s, replica, VersionedTable.read(s, srcPath, Some(v1)), "key_bucket")
+    replica
+  }
+
+  /** q148's per-batch half against a built source warehouse and a
+    * bootstrapped replica: derive the feed, apply it (idempotent — a
+    * re-apply converges, so the serve repeats), read the active snapshot.
     */
   def q148Apply(s: SparkSession, srcPath: String, v1: Long, v2: Long, replicaPath: String): DataFrame = {
     import graft.sources.VersionedTable
@@ -3507,24 +3343,8 @@ object Queries {
       .select(col("o_custkey"), col("o_orderkey"), col("o_orderdate"), col("o_totalprice"))
   }
 
-  /** q141: SNAPSHOT-DRIFT DQ between warehouse versions
-    * ([[dq.DqSuite.versionDrift]]) — the nightly between-commits gate:
-    * the same metric set (record count, active count, distinct keys,
-    * active value cents) evaluated against version 1 and version 2 of
-    * the q106 warehouse, emitted as (metric, from, to, delta) rows. The
-    * oracle re-derives both versions' stats from the source relations
-    * (v1 = pre-1998 latest per key, v2 = v1 superseded by the post-1998
-    * batch), so time travel AND the SCD-2 close arithmetic are gated.
-    */
-  def q141(s: SparkSession, dir: String): DataFrame = {
-    val (path, v1, v2) = q106Build(s, dir)
-    q141Drift(s, path, v1, v2)
-  }
-
   /** q141's per-invocation half: the between-versions drift diff against
-    * an existing warehouse (Bench runs it on the prebuilt q106 warehouse
-    * so the timed cost is the two time-travel reads + aggregation, not
-    * the commit cycles that produced them).
+    * a built q106 warehouse — two time-travel reads + the aggregation.
     */
   def q141Drift(s: SparkSession, path: String, v1: Long, v2: Long): DataFrame = {
     def snap(v: Long) = graft.sources.VersionedTable.read(s, path, Some(v))
@@ -3539,30 +3359,9 @@ object Queries {
     )
   }
 
-  /** q165: PERSISTED SKETCH ROLLUP — the pre-aggregation layout every
-    * 100 TB "distinct users over an arbitrary date range" query needs:
-    * per-(day, event_type) HLL sketches committed to the versioned
-    * warehouse DAY-PARTITIONED (two incremental commits here — the
-    * nightly append shape: a new day's load touches only its own
-    * partitions), then range queries served by MERGING the stored
-    * sketch bytes — `readPartitions` over the enumerated day list, so
-    * the manifest prunes to the range's partitions before any file is
-    * listed, and the events table is never rescanned. q125 proved HLL
-    * mergeability inside one job; this is the cross-job half: the
-    * sketches survive as table state and any future range reads
-    * O(days × types) sketch rows instead of the raw corpus. The exact
-    * side is the audit (`est_ok`: merged estimate within 5% of exact),
-    * pinned TRUE by the oracle — the q63/q113/q125 self-validating
-    * pattern, so an estimate drifting out of bound hash-fails.
-    */
-  def q165(s: SparkSession, dir: String): DataFrame = {
-    val path = q165Build(s, dir)
-    q165Probe(s, path, dir)
-  }
-
   /** q165's build half: two incremental day-range commits of
-    * per-(day, event_type) HLL sketches. Bench times [[q165Probe]] only
-    * (build in setup_sec) — the production shape is one commit per day.
+    * per-(day, event_type) HLL sketches — the production shape is one
+    * commit per day.
     */
   def q165Build(s: SparkSession, dir: String): String = {
     val path = scratchDir("sketchrollup") + "/rollup"
@@ -3623,26 +3422,9 @@ object Queries {
     }.reduce(_.unionByName(_))
   }
 
-  /** q166: STREAMING CDC REPLICA APPLY
-    * ([[graft.streaming.Streaming.cdcApplySink]]) — q148's consumer run
-    * as a CONTINUOUS stream: the v1→v2 change feed arrives as TWO
-    * micro-batches (key-hash split on o_custkey, so each key's
-    * insert/delete/update pre+post rows stay in one batch), and each
-    * batch applies to the replica as one marker-committed idempotent
-    * upsert (touched-bucket rewrite only). The final replica active set
-    * must equal the source's v2 active set — q148's oracle verbatim, so
-    * batch boundaries, the marker protocol, and replay order are all
-    * hash-gated. StreamingSpec adds the lost-checkpoint restart case
-    * (re-delivered batch ids commit nothing).
-    */
-  def q166(s: SparkSession, dir: String): DataFrame = {
-    val (path, v1, v2) = q106Build(s, dir)
-    q166Stream(s, path, v1, v2)
-  }
-
-  /** q166's per-invocation half: fresh replica bootstrap at v1 + the
-    * two-batch streamed apply + the final active read (Bench reuses the
-    * prebuilt q106 warehouse, so the timed cost is the consumer side).
+  /** q166's per-invocation half against a built q106 warehouse: fresh
+    * replica bootstrap at v1 + the two-batch streamed apply + the final
+    * active read.
     */
   def q166Stream(s: SparkSession, srcPath: String, v1: Long, v2: Long): DataFrame = {
     import graft.sources.VersionedTable
@@ -3751,24 +3533,8 @@ object Queries {
       "source", "doc_id",
       Map("src0" -> 23000L, "src1" -> 6000L, "src2" -> 15000L, "src3" -> 0L))
 
-  /** q171: PERSISTED HISTOGRAM ROLLUP
-    * ([[graft.dq.DqSuite.histogramByKey]]/[[graft.dq.DqSuite.histogramMergeServe]])
-    * — the EXACT-mergeable profiling twin of the q165 sketch rollup:
-    * per-day sparse histogram partials of event value cents (fixed
-    * caller-set bounds, so the same value bins identically in every
-    * partition forever) committed day-partitioned in two incremental
-    * commits, then arbitrary date ranges profiled by ADDING the stored
-    * partials — no tolerance, no sketch: the merged histogram IS the
-    * direct histogram of the range, which the oracle recomputes from
-    * raw events and hash-compares.
-    */
-  def q171(s: SparkSession, dir: String): DataFrame = {
-    val path = q171Build(s, dir)
-    q171Probe(s, path)
-  }
-
   /** q171's build half: two incremental day-range commits of sparse
-    * per-day histogram partials (bench times [[q171Probe]] only).
+    * per-day histogram partials.
     */
   def q171Build(s: SparkSession, dir: String): String = {
     val path = scratchDir("histrollup") + "/rollup"
@@ -3802,25 +3568,8 @@ object Queries {
     }.reduce(_.unionByName(_))
   }
 
-  /** q172: INCREMENTAL KEYED-JOIN VIEW MAINTENANCE
-    * ([[operators.Mv.maintainKeyedJoin]]) — the join analogue of q119's
-    * count/sum view: V = latest-order ⋈ customer-dimension on custkey,
-    * bootstrapped at (a1, b1), then BOTH sides advance (the q106 SCD-2
-    * upsert on the fact side; a segment update on custkey % 7 = 0 on the
-    * dimension side) and the view follows by recomputing ONLY the keys
-    * either change feed names — every other row carries forward by anti
-    * join, untouched. O(changed keys), never a snapshot join. The oracle
-    * recomputes the full join at the to-versions, so carry/recompute
-    * partitioning errors hash-fail.
-    */
-  def q172(s: SparkSession, dir: String): DataFrame = {
-    val (aPath, a1, a2) = q106Build(s, dir)
-    q172Maintain(s, aPath, a1, a2, dir)
-  }
-
-  /** q172's per-invocation half: dimension-side build + bootstrap + both
-    * feeds + maintenance (Bench reuses the prebuilt q106 fact warehouse,
-    * so the timed cost is the consumer cycle, not the fact-side commits).
+  /** q172's per-invocation half against a built q106 fact warehouse:
+    * dimension-side build + bootstrap + both feeds + maintenance.
     */
   def q172Maintain(s: SparkSession, aPath: String, a1: Long, a2: Long, dir: String): DataFrame = {
     import graft.sources.VersionedTable
@@ -4096,26 +3845,9 @@ object Queries {
       )
   }
 
-  /** q182: STREAMING WARC INGESTION — the continuous-crawl production
-    * shape: .warc.gz files land in a directory and a file-source stream
-    * ([[graft.sources.Warc.readWarc]] over `binaryFile` micro-batches,
-    * maxFilesPerTrigger forcing several batches) parses them as they
-    * arrive. The parse is stateless, so batch boundaries cannot perturb
-    * the result: the oracle is q175's, verbatim — the streamed ingest
-    * must converge to the batch parse bit-for-bit, torn-file sentinels
-    * included. Fixture files are written executor-side (no driver
-    * funnel), one .warc.gz per 5 docs.
-    */
-  def q182(s: SparkSession, dir: String): DataFrame =
-    q182Stream(s, q182Build(s, dir))
-
-  /** q182's one-time half: generate and land the .warc.gz fixture files.
-    * Split out (round-19) so Bench can time only [[q182Stream]] — the
-    * streaming ingest itself, the recurring per-trigger cost — with the
-    * fixture generation (gzip-encoding the corpus and creating ~corpus/5
-    * files, input we'd GET for free in production) in setup_sec, the
-    * same adjudication as q130/q140/q148. Verify still runs the full
-    * build+stream query.
+  /** q182's one-time half: generate and land the .warc.gz fixture files
+    * (gzip-encoding the corpus into ~corpus/5 files — input production
+    * gets for free, not the streaming operator).
     */
   def q182Build(s: SparkSession, dir: String): String = {
     import s.implicits._

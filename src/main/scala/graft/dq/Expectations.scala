@@ -299,16 +299,16 @@ object DqSuite {
       .select(col("bin"), col("lo_edge_cents"), col("n").as("ref_n"))
     val c = histogram(cur, valueCents, loCents, hiCents, bins)
       .select(col("bin"), col("n").as("cur_n"))
-    val joined = r
-      .join(c, "bin")
-      .withColumn("__rt", sum(col("ref_n")).over(org.apache.spark.sql.expressions.Window.partitionBy()))
-      .withColumn("__ct", sum(col("cur_n")).over(org.apache.spark.sql.expressions.Window.partitionBy()))
+    // grand totals as one-row aggregates cross-joined back: an
+    // unpartitioned window would pull every row into one partition
+    val joined = r.join(c, "bin")
+    val shares = joined
+      .crossJoin(joined.agg(sum(col("ref_n")).as("__rt"), sum(col("cur_n")).as("__ct")))
       .withColumn("ref_share_e4", expr("CASE WHEN __rt = 0 THEN 0L ELSE (ref_n * 10000L) div __rt END"))
       .withColumn("cur_share_e4", expr("CASE WHEN __ct = 0 THEN 0L ELSE (cur_n * 10000L) div __ct END"))
       .withColumn("abs_delta_e4", abs(col("cur_share_e4") - col("ref_share_e4")))
-    joined
-      .withColumn("__sumd", sum(col("abs_delta_e4")).over(org.apache.spark.sql.expressions.Window.partitionBy()))
-      .withColumn("tvd_e4", expr("__sumd div 2L")) // integer halving — no double division
+    shares
+      .crossJoin(shares.agg(expr("sum(abs_delta_e4) div 2L").as("tvd_e4"))) // integer halving — no double division
       .select(
         col("bin"), col("lo_edge_cents"), col("ref_n"), col("cur_n"),
         col("ref_share_e4"), col("cur_share_e4"), col("abs_delta_e4"), col("tvd_e4"))

@@ -312,22 +312,25 @@ class PlanQualitySpec extends AnyFunSuite {
     val probe = graft.Queries.q165Probe(spark, path, dir)
     // the ESTIMATE branch must read only committed sketch dirs; events
     // appears solely in the exact-audit branch
-    val p = probe.queryExecution.executedPlan.toString
-    // since round-18 the requested day partitions arrive as ONE multi-dir
-    // relation (readPartitionsUnioned); round-19 (ADVICE r18 #5) pins the
-    // assertion to the SKETCH SCAN's own line: its InMemoryFileIndex
-    // location must point under the committed rollup table (the plan
-    // renderer truncates the path list, so the v=/p= tail is not always
-    // visible) with MULTIPLE partition dirs, and the same scan must read
-    // the sketch bytes — "rollup" somewhere else in the text no longer
-    // satisfies the check
-    val sketchScanLines = p.linesIterator.filter(l =>
-      l.contains("InMemoryFileIndex") && l.contains("rollup/") && l.contains("sk:binary")).toSeq
-    assert(sketchScanLines.nonEmpty,
-      s"range serve must scan the stored rollup's committed partition dirs (sk:binary scan):\n$p")
-    val nPaths = "InMemoryFileIndex\\((\\d+) paths\\)".r
-    assert(sketchScanLines.forall(l => nPaths.findFirstMatchIn(l).exists(_.group(1).toInt >= 2)),
-      s"sketch scan should read the requested committed day partitions as one multi-dir relation:\n$p")
+    val executed = probe.queryExecution.executedPlan
+    val p = executed.toString
+    // the requested day partitions arrive as ONE multi-dir relation
+    // (readPartitionsUnioned): some scan node must read the sketch bytes
+    // from at least two root paths, every one of them under the committed
+    // rollup table. The scan nodes are inspected directly — the plan text
+    // truncates its Location at spark.sql.maxMetadataStringLength
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(executed) { case f: FileSourceScanExec => f }
+    val root = new org.apache.hadoop.fs.Path(path).toUri.getPath.stripSuffix("/") + "/"
+    def described = scans.map(f =>
+      s"${f.relation.location.rootPaths.mkString(",")} ${f.requiredSchema.simpleString}").mkString("\n")
+    val sketchScans = scans.filter(f =>
+      f.requiredSchema.fieldNames.contains("sk") &&
+        f.relation.location.rootPaths.forall(_.toUri.getPath.startsWith(root)))
+    assert(sketchScans.nonEmpty, s"range serve must scan the sketch bytes under $root:\n$described")
+    assert(sketchScans.forall(_.relation.location.rootPaths.size >= 2),
+      s"sketch scan should read the requested committed day partitions as one multi-dir relation:\n$described")
     // the events table feeds ONLY the exact-audit subtree: exactly the
     // audit branch's scans of it, never a scan under the estimate branch
     // (2 ranges x 1 audit scan each = at most 2 file-index mentions)

@@ -112,6 +112,21 @@ class SimilaritySpec extends AnyFunSuite {
     assert(rTrained >= rInit, s"trained recall $rTrained below untrained $rInit")
   }
 
+  test("trainIvfCentroids: a sample restricts training at iters = 1 too, not only when cached") {
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val init = emb.filter($"vec_id" < 8).select($"vec_id", $"embedding")
+      .collect().map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble)).sortBy(_._1).toSeq
+    val sample = $"vec_id" % 3 === 0
+    val sampled = Similarity.trainIvfCentroids(emb, "embedding", init, iters = 1, sample = Some(sample))
+    val full = Similarity.trainIvfCentroids(emb, "embedding", init, iters = 1)
+    val onSample = Similarity.trainIvfCentroids(emb.filter(sample), "embedding", init, iters = 1)
+    // plain Booleans: the centroid vectors are too long for a readable diff
+    val sampleMoves = full != onSample
+    val trainsOnSample = sampled == onSample
+    assert(sampleMoves, "fixture sample must move the one-step centroids, or this case proves nothing")
+    assert(trainsOnSample, "iters = 1 with a sample must train on the sample alone")
+  }
+
   test("IVF cell-partitioned storage: a probe reads only its nprobe partitions") {
     // the at-rest layout SCALE.md claims for IVF: store the table
     // delta-committed partitioned by cell id, so a probe is a pruned
